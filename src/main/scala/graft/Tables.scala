@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated TPC-H-ish tables (see TESTDATA.md).
   *
@@ -38,9 +38,28 @@ object Tables {
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt,
       keys: _*)
 
+  /** One version of a file: its path plus the Hadoop `FileStatus`
+    * modification time and length. A file rewritten at the same path
+    * (a corpus rebuilt at another scale inside one JVM, a table
+    * re-encoded) gets a new key, so memos keyed on it never go stale. */
+  def fileVersion(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val st = p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+    s"$path@${st.getModificationTime}:${st.getLen}"
+  }
+
+  /** Raw (pre-normalization) parquet schema per file version. Without
+    * a schema, every `spark.read.parquet` runs a one-task job to read
+    * the footer again; a session that serves many short queries over
+    * the same tables pays that once per table instead of per call. */
+  private val rawSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
+
   def apply(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val schema = rawSchemas.computeIfAbsent(fileVersion(spark, path),
+      _ => spark.read.parquet(path).schema)
+    val df = spark.read.schema(schema).parquet(path)
     val rescaled = nanosTimestampCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       if (d.schema.exists(f => f.name == c && f.dataType == LongType))
         d.withColumn(c, timestamp_micros(expr(s"$c div 1000")))  // integer div: no double rounding

@@ -165,17 +165,12 @@ object GraphQueries {
     // memoized per corpus SNAPSHOT: the footer count is cheap but this
     // builder is invoked once by lpaLabels AND once by the modularity
     // epilogue per query run (the CacheManager dedupes the FRAME;
-    // the count would otherwise run twice per build). The memo key
-    // carries the lineitem file's (mtime, length) next to the dir
-    // (r11 ADVICE): a corpus dir rebuilt at a different scale inside
-    // one JVM (the ScaleCheck build-then-run session) gets a fresh
-    // count instead of a stale-sized edge exchange.
-    val key = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      s"$dir@${st.getModificationTime}:${st.getLen}"
-    }
+    // the count would otherwise run twice per build). The memo key is
+    // the lineitem file's version (Tables.fileVersion): a corpus dir
+    // rebuilt at a different scale inside one JVM (the ScaleCheck
+    // build-then-run session) gets a fresh count instead of a
+    // stale-sized edge exchange.
+    val key = Tables.fileVersion(s, s"$dir/lineitem.parquet")
     val parts = math.max(
       s.conf.get("spark.sql.shuffle.partitions", "32").toInt,
       (liCount.computeIfAbsent(key, _ => li.count()) / 500000L).toInt)

@@ -1,5 +1,10 @@
 package graft
 
+import java.nio.file.{Files, StandardCopyOption}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 /** Schema-drift canary: asserts the POST-normalization Spark schema
   * (names AND types, in order) of all 10 driver tables at sf0.001.
   *
@@ -8,6 +13,11 @@ package graft
   * normalizes every encoding to plain TimestampType; if a third
   * encoding ever arrives, THIS test names the drift directly instead
   * of five unrelated queries failing analysis downstream.
+  *
+  * Also gates the schema cache by count: `Tables` infers a table's
+  * parquet schema once per file version, so a repeat call launches no
+  * Spark job, and a file rewritten at the same path is read with its
+  * new schema.
   */
 class TablesSpec extends SparkSpec {
 
@@ -61,6 +71,59 @@ class TablesSpec extends SparkSpec {
         f.dataType.catalogString.startsWith("timestamp_ntz") ||
           (f.name == "ts" && f.dataType.catalogString != "timestamp"))
       assert(bad.isEmpty, s"$name: un-normalized temporal fields: $bad")
+    }
+  }
+
+  /** Spark jobs started while `body` runs, counted by a listener. The
+    * bus delivers events in order, so once a marker job run after
+    * `body` is seen, every job of `body` has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "TablesSpec-marker"
+    val seen = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      Iterator.continually(seen.poll(60, TimeUnit.SECONDS))
+        .map { d => assert(d != null, "listener bus never delivered the marker job"); d }
+        .takeWhile(_ != marker).size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a second Tables call on an unchanged file launches no Spark job") {
+    Tables.names.foreach(n => Tables(spark, sf, n))
+    Tables.names.foreach { n =>
+      assert(jobsDuring(Tables(spark, sf, n)) == 0, s"$n: schema inferred again")
+    }
+  }
+
+  test("a table file rewritten at the same path is read with its new schema") {
+    val dir = Files.createTempDirectory("graft-tables-version")
+    import spark.implicits._
+    // corpus tables are single parquet files: write a one-partition
+    // frame and move its part file into place
+    def put(df: org.apache.spark.sql.DataFrame): Unit = {
+      val stage = dir.resolve("stage").toString
+      df.coalesce(1).write.mode("overwrite").parquet(stage)
+      val part = new java.io.File(stage).listFiles().find(_.getName.endsWith(".parquet")).get
+      Files.move(part.toPath, dir.resolve("t.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    }
+    try {
+      put(Seq((1L, "a")).toDF("k", "v"))
+      assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("k", "v"))
+      put(Seq((2L, 3.5, "b", 4)).toDF("k", "x", "v", "n"))
+      val again = Tables(spark, dir.toString, "t")
+      assert(again.columns.toSeq == Seq("k", "x", "v", "n"))
+      assert(again.collect().toSeq.map(_.toSeq) == Seq(Seq(2L, 3.5, "b", 4)))
+    } finally {
+      Files.walk(dir).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
     }
   }
 }
