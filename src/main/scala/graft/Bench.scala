@@ -143,6 +143,19 @@ object Bench {
         } else Map.empty
       } catch { case _: Throwable => Map.empty }
 
+    // Per-run micro-batch phase medians (ms), in e2eRun call order:
+    // Spark's own durationMs phases of every executed batch plus the
+    // state operator's commitTimeMs, so the artifact shows which part
+    // of a micro-batch the e2e latency below is made of.
+    val e2ePhases = scala.collection.mutable.ArrayBuffer.empty[Seq[(String, Double)]]
+    def phaseMedians(q: org.apache.spark.sql.streaming.StreamingQuery): Seq[(String, Double)] = {
+      val batches = q.recentProgress.filter(_.durationMs.containsKey("addBatch")).toSeq
+      def median(xs: Seq[Double]): Double =
+        if (xs.isEmpty) 0.0 else { val s = xs.sorted; s((s.size - 1) / 2) }
+      val phases = Seq("triggerExecution", "addBatch", "walCommit", "commitOffsets", "queryPlanning")
+        .map(k => k -> median(batches.flatMap(b => Option(b.durationMs.get(k)).map(_.toDouble))))
+      phases :+ ("commitTimeMs" -> median(batches.flatMap(_.stateOperators.map(_.commitTimeMs.toDouble))))
+    }
     // ---- e2e micro-batch latency (runs FIRST — r8 VERDICT #2) ----
     // End-to-end micro-batch latency (BASELINE.md "end-to-end < 2 s"
     // row): frames enqueued into a REAL Structured Streaming query
@@ -226,6 +239,7 @@ object Bench {
         require(bound == e2eParts,
           s"e2e probe stream bound $bound state partitions, expected $e2eParts " +
             "(conf must be set before writeStream.start and restored after)")
+        e2ePhases += phaseMedians(q)
       } finally q.stop()
       java.util.Arrays.sort(lats)
       Seq(0.50, 0.95, 0.99).map(p =>
@@ -520,6 +534,9 @@ object Bench {
       (if (pool.nonEmpty) pool else e2eRunsAll).minBy(_.last)
     }
     val Seq(e50, e95, e99) = e2ePcts.map(v => math.rint(v * 100) / 100)
+    // phases of the headline run (empty when the e2e block was skipped)
+    val e2ePhaseJson = e2ePhases.lift(e2eRunsAll.indexOf(e2ePcts)).getOrElse(Nil)
+      .map { case (k, v) => "\"" + k + "\":" + math.rint(v * 100) / 100 }.mkString("{", ",", "}")
     val e2eRunsJson = e2eRunsAll.map(r =>
       r.map(v => math.rint(v * 100) / 100).mkString("[", ",", "]"))
       .mkString("[", ",", "]")
@@ -541,7 +558,7 @@ object Bench {
       "\"" + k + "\":[" + vs.mkString(",") + "]" }.mkString("{", ",", "}")
     val residJson = residuals.map { case (k, n) =>
       "\"" + k + "\":" + n }.mkString("{", ",", "}")
-    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_runs":$qruns,"queries_gc_ms":$gcJson,"cache_residual_rdds":$residJson,"errors":$errJson,"sf":"$sfDir","video_pipeline_fps":${fps.round},"video_pipeline_fps_runs":[${fpsRuns.map(_.round).mkString(",")}],"fps_runs_quiet":$fpsQuietJson,"fps_runs_ctx":${ctxJson(fpsCtx.toSeq)},"fps_contended":$fpsContended,"fps_quiet_in_quiet_sweep":${!fpsContended && !sweepContended},"frame_latency_ms":{"p50":$p50,"p95":$p95,"p99":$p99},"e2e_latency_ms":{"p50":$e50,"p95":$e95,"p99":$e99},"e2e_latency_ms_runs":$e2eRunsJson,"e2e_runs_quiet":$e2eQuietJson,"e2e_runs_ctx":${ctxJson(e2eCtx.toSeq)},"e2e_late_recheck":$e2eLateRecheck,"e2e_contended":$e2eContended,"e2e_quiet_in_quiet_sweep":${!e2eContended && !sweepContended},"sweep_contended":$sweepContended,"contended":$contended,"contention_probe_ms":$probesJson,"loadavg1m":$loadsJson,"code_cache_mb":$ccJson}"""
+    val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"queries_runs":$qruns,"queries_gc_ms":$gcJson,"cache_residual_rdds":$residJson,"errors":$errJson,"sf":"$sfDir","video_pipeline_fps":${fps.round},"video_pipeline_fps_runs":[${fpsRuns.map(_.round).mkString(",")}],"fps_runs_quiet":$fpsQuietJson,"fps_runs_ctx":${ctxJson(fpsCtx.toSeq)},"fps_contended":$fpsContended,"fps_quiet_in_quiet_sweep":${!fpsContended && !sweepContended},"frame_latency_ms":{"p50":$p50,"p95":$p95,"p99":$p99},"e2e_latency_ms":{"p50":$e50,"p95":$e95,"p99":$e99},"e2e_latency_ms_runs":$e2eRunsJson,"e2e_phase_ms":$e2ePhaseJson,"e2e_runs_quiet":$e2eQuietJson,"e2e_runs_ctx":${ctxJson(e2eCtx.toSeq)},"e2e_late_recheck":$e2eLateRecheck,"e2e_contended":$e2eContended,"e2e_quiet_in_quiet_sweep":${!e2eContended && !sweepContended},"sweep_contended":$sweepContended,"contended":$contended,"contention_probe_ms":$probesJson,"loadavg1m":$loadsJson,"code_cache_mb":$ccJson}"""
     // The driver keeps only the LAST 2000 chars of bench output, so the
     // full per-query map (~6 KB at 157 queries) has never fit — every
     // round's artifact shows `parsed: null` (r6 ADVICE). Split the

@@ -19,6 +19,25 @@ object Sessions {
     * session that generates code. */
   val CodegenCacheEntries: Int = 1000
 
+  /** The engine's static settings, fixed once per JVM: the codegen
+    * cache size above, and the local filesystem for the `file` scheme
+    * (`FileSystem` and FileContext) that does not fork `chmod` and
+    * `readlink` per file (`LocalFs.scala`). Hadoop caches `FileSystem`
+    * instances JVM-wide and not by conf, so every session in a JVM
+    * (this factory's and the specs') must set the same values or the
+    * class under test would depend on which session came first. */
+  val StaticSettings: Seq[(String, String)] = Seq(
+    "spark.sql.codegen.cache.maxEntries" -> CodegenCacheEntries.toString,
+    "spark.hadoop.fs.file.impl" -> classOf[GraftLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[GraftLocalFs].getName)
+
+  /** Apply [[StaticSettings]]; as with the extensions, a value already
+    * submitted (spark-submit system property) wins. */
+  def withStaticSettings(b: SparkSession.Builder): SparkSession.Builder = {
+    for ((k, v) <- StaticSettings if !sys.props.contains(k)) b.config(k, v)
+    b
+  }
+
   def build(app: String): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // the engine's SQL functions ride every session this factory
@@ -30,12 +49,9 @@ object Sessions {
       .map(e => if (e.contains("graft.GraftExtensions")) e
                 else e + ",graft.GraftExtensions")
       .getOrElse("graft.GraftExtensions")
-    val b = SparkSession.builder().appName(app)
+    val b = withStaticSettings(SparkSession.builder().appName(app)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", ext)
-    // same rule as the extensions: a submitted value wins
-    if (!sys.props.contains("spark.sql.codegen.cache.maxEntries"))
-      b.config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
+      .config("spark.sql.extensions", ext))
     // spark-submit sets the spark.master system property — only pick a
     // master when none was submitted. The local-mode tuning (shuffle
     // width = cores, UI off) applies ONLY when that master is actually

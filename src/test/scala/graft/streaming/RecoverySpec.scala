@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import graft.SparkSpec
+import graft.{ShellForks, SparkSpec}
 import graft.streaming.VideoSessionProcessor.{Config, FrameIn}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -69,7 +69,14 @@ class RecoverySpec extends SparkSpec {
         sink(out).where($"kind" === "completion").count() >= 1 && dets().count() == 11
       }
     } finally q2.stop()
+    assertRecovered(out)
+  }
 
+  /** One session of frames 0..9 split across restarts, closed by a gap
+    * frame: every detection exactly once, indices continuing across the
+    * restarts, one completion carrying all ten frames. */
+  private def assertRecovered(out: String): Unit = {
+    def dets() = sink(out).where($"kind" === "detection").select($"detection.*")
     val d = dets().orderBy($"frame_number").collect()
     // no duplicated detections across the restart (exactly-once sink)
     assert(d.map(_.getAs[Int]("frame_number")).toSeq == ((0 to 9) :+ 400))
@@ -93,6 +100,66 @@ class RecoverySpec extends SparkSpec {
     // generous idle timeout: recovery is under test, not the close path
     runRecovery("fmgws",
       ds => VideoSessionProcessor.processStream(ds, Config(idleTimeoutMs = 600000L)))
+  }
+
+  /** Session settings that send `file:` back to Hadoop's stock local
+    * classes for what runs under them: the FileContext class is looked
+    * up per use, and the `FileSystem` cache (JVM-wide, not keyed by
+    * conf) is bypassed so the engine's cached instance is not reused. */
+  private val StockLocalFs = Seq(
+    "fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs",
+    "fs.file.impl" -> "org.apache.hadoop.fs.LocalFileSystem",
+    "fs.file.impl.disable.cache" -> "true")
+
+  private def withStockLocalFs[T](body: => T): T = {
+    StockLocalFs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally StockLocalFs.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
+  /** A checkpoint and parquet sink written with Hadoop's stock local
+    * classes restart under the engine's (`graft.LocalFs`) and back:
+    * state written by either class is read by the other, the sink's
+    * .crc files verify under both, and no output is duplicated. */
+  private def runAcrossLocalFsChange(name: String): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val out = Files.createTempDirectory(s"graft_${name}_out").toString
+    val ckpt = Files.createTempDirectory(s"graft_${name}_ckpt").toString
+    val input = MemoryStream[FrameIn]
+    def dets() = sink(out).where($"kind" === "detection").count()
+    /** Restart from the checkpoint, feed `frames`, wait for `ready`;
+      * returns the Hadoop shell processes started meanwhile. */
+    def phase(frames: Seq[FrameIn])(ready: => Boolean): Int = ShellForks.count {
+      val q = VideoSessionProcessor.processStream(input.toDS(), Config(idleTimeoutMs = 600000L))
+        .writeStream.format("parquet").option("path", out)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append()).start()
+      try {
+        input.addData(frames: _*)
+        poll()(ready)
+      } finally q.stop()
+    }._2
+    val stock1 = withStockLocalFs(phase((0 to 4).map(i => FrameIn("v1", i, i * 1000L)))(dets() == 5))
+    val graft2 = phase((5 to 9).map(i => FrameIn("v1", i, i * 1000L)))(dets() == 10)
+    val stock3 = withStockLocalFs(phase(Seq(FrameIn("v1", 400, 400000L))) {
+      sink(out).where($"kind" === "completion").count() >= 1 && dets() == 11
+    })
+    // the phases really ran on different classes
+    assert(stock1 > 0 && stock3 > 0, s"stock phases forked $stock1, $stock3 times")
+    assert(graft2 == 0, s"engine phase forked $graft2 times")
+    assertRecovered(out)
+    val rows = withStockLocalFs(sink(out).collect().map(_.toString).sorted.toSeq)
+    assert(rows.nonEmpty && rows == sink(out).collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("a checkpoint written by Hadoop's stock local classes recovers under the engine's and back") {
+    runAcrossLocalFsChange("fsswap_hdfs")
+  }
+
+  test("a RocksDB checkpoint written by Hadoop's stock local classes recovers under the engine's and back") {
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try runAcrossLocalFsChange("fsswap_rocksdb")
+    finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("transformWithState query recovers RocksDB state from a checkpoint without duplicating output") {
